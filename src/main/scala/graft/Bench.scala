@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   // --- environment forensics (r16 judge item 1) -------------------------
   // Two rounds running, the driver record's excess over the builder pin
@@ -35,21 +34,129 @@ object Bench {
       .asScala.map(_.getCollectionTime.max(0L)).sum
   }
 
+  private def jstr(s: String): String = JsonUtil.jstr(s)
+  private def sec(v: Double): String = JsonUtil.num(v)
+
+  /** What one bench run measured: per-query (name, best seconds,
+    * error), run-2 failures, contended rows with their attempt pairs and
+    * rerun, per-query GC, the environment snapshot and the suite filter.
+    * [[fullLine]] and [[stdoutLine]] render it. */
+  final case class Record(
+      wall: Double,
+      results: Seq[(String, Double, Option[String])],
+      transients: collection.Map[String, String],
+      contended: Seq[String],
+      attempts: collection.Map[String, (Double, Double)],
+      rerun: collection.Map[String, Double],
+      gcSec: collection.Map[String, Double],
+      envJson: String,
+      load1: Double,
+      only: Option[Set[String]],
+      sfDir: String) {
+    def timings: Seq[(String, Double)] =
+      results.collect { case (k, v, None) => (k, v) }
+  }
+
+  private def line(r: Record, entries: Seq[(String, Double)], dropped: Int,
+                   slim: Boolean): String = {
+    val qs = entries.map { case (k, v) => jstr(k) + ":" + sec(v) }
+      .mkString("{", ",", "}")
+    val errors = r.results.collect { case (k, _, Some(e)) => (k, e) }
+    // the stdout (slim) record carries error COUNTS: 20 error texts of
+    // 300 chars alone exceed its 2000-char budget; the texts stay in
+    // the BENCH.json file record
+    def texts(es: Iterable[(String, String)]) = es.map { case (k, e) =>
+      jstr(k) + ":" + jstr(e.take(300)) }.mkString("{", ",", "}")
+    val errs = if (slim)
+      s""""errors_n":${errors.size},"transient_errors_n":${r.transients.size}"""
+    else s""""errors":${texts(errors)},"transient_errors":${texts(r.transients)}"""
+    val drop = if (dropped > 0)
+      s""","queries_dropped":$dropped,"queries_file":"BENCH.json"""" else ""
+    // a SPARK_GRAFT_BENCH_ONLY-restricted run marks itself explicitly:
+    // a partial record must never be mistakable for (or pinned as) a
+    // full suite run
+    val filt = r.only.map(f =>
+      s""","suite_filter":${jstr(f.toSeq.sorted.mkString(","))}""")
+      .getOrElse("")
+    // rows reading process-shared materializations time a checkpoint
+    // read after the first toucher — flag them so per-query numbers
+    // aren't misread as full-chain costs. In the slim (stdout) record
+    // the full name list and the contended attempt detail yield their
+    // chars to per-query rows (the one-line record must always carry
+    // enough rows for a round-over-round per-query comparison); both
+    // stay complete in the BENCH.json file record.
+    val sharedNames = SparkEntry.sharedStageReaders
+      .filter(n => r.results.exists(_._1 == n))
+    val shared = if (slim) s""""shared_stage_readers_n":${sharedNames.size}"""
+      else s""""shared_stage_readers":${sharedNames.map(jstr).mkString("[", ",", "]")}"""
+    // per-query GC only in the full file record
+    val gcs = if (slim) "" else
+      ",\"queries_gc\":" + r.gcSec.map { case (k, v) =>
+        jstr(k) + ":" + sec(v) }.mkString("{", ",", "}")
+    // value_seq is the gate-comparable headline: six same-code r17 runs produced concurrent walls of 117.5-396.5 s
+    // (the 4-way suite wall measures the box) while the Σ of the
+    // sequential best-of-2 per-query timings spread only 241→301 s
+    // and per-query medians agreed within 6%. Compare a run's
+    // value_seq to the pin's Σ medians; `value` stays the honest
+    // concurrent-throughput wall but is NOT stable across boxes.
+    // wall_contended: true when the box was already busy at start
+    // (1-min loadavg ≥ 2) or the pass itself flagged many skewed
+    // rows — a signal that `value` measured contention, not code
+    val wallContended = r.load1 >= 2.0 || r.contended.size > 10
+    // one contended-row entry: raw attempts + rerun, everything needed
+    // to tell "plan got slower" from "box was busy"
+    val cont = if (slim) r.contended.map(jstr).mkString("[", ",", "]")
+      else r.contended.map { name =>
+        val (t1, t2) = r.attempts(name)
+        val re = r.rerun.get(name).filter(_ > 0).map(v => "," + sec(v)).getOrElse("")
+        s"""{"name":${jstr(name)},"attempts":[${sec(t1)},${sec(t2)}$re],"gc_sec":${sec(r.gcSec.getOrElse(name, 0.0))}}"""
+      }.mkString("[", ",", "]")
+    s"""{"metric":"total","value":${sec(r.wall)},"value_seq":${sec(r.timings.map(_._2).sum)},"wall_contended":$wallContended,"unit":"sec","queries":$qs,"queries_mode":"sequential_best_of_2_rerun_contended","queries_total":${r.results.size}$drop$filt,$shared,$errs,"contended":$cont,"env":${r.envJson}$gcs,"sf":${jstr(r.sfDir)}}"""
+  }
+
+  /** The full-fidelity record, every row by name (the BENCH.json file). */
+  def fullLine(r: Record): String =
+    line(r, r.timings.sortBy(_._1), 0, slim = false)
+
+  val StdoutBudget = 1850
+  val StdoutFloor = 40
+  val StdoutMax = 2000
+
+  /** The stdout record. Its reader keeps only the last ~2000 chars and
+    * the suite's query names alone exceed that, so: the slim envelope
+    * plus as many slowest-first rows as fit [[StdoutBudget]], never
+    * fewer than [[StdoutFloor]] (the record must carry enough rows
+    * for a round-over-round per-query comparison),
+    * with an explicit dropped count and file pointer. The floor yields
+    * to the hard [[StdoutMax]]: rows are dropped (and the drop logged)
+    * rather than emit an over-long line, and an envelope that alone
+    * exceeds it degrades to the headline fields. */
+  def stdoutLine(r: Record, log: String => Unit = System.err.println): String = {
+    val bySlowest = r.timings.sortBy(-_._2)
+    def at(n: Int) = line(r, bySlowest.take(n), bySlowest.length - n, slim = true)
+    val fit = (bySlowest.length to 0 by -1)
+      .find(n => at(n).length <= StdoutBudget).getOrElse(0)
+      .max(math.min(StdoutFloor, bySlowest.length))
+    (fit to 0 by -1).find(n => at(n).length <= StdoutMax) match {
+      case Some(n) =>
+        if (n < fit) log(s"[bench] stdout record over $StdoutMax chars at " +
+          s"$fit rows: dropped to $n rows (all rows are in BENCH.json)")
+        at(n)
+      case None =>
+        log(s"[bench] stdout envelope over $StdoutMax chars: headline " +
+          "only (the full record is in BENCH.json)")
+        s"""{"metric":"total","value":${sec(r.wall)},"value_seq":${sec(r.timings.map(_._2).sum)},"unit":"sec","queries_total":${r.results.size},"errors_n":${r.results.count(_._3.isDefined)},"queries_file":"BENCH.json"}"""
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     // reclaim scratch debris from dead runs BEFORE timing anything —
     // accumulated stale temp dirs inflated past records ~30% (r15)
     Scratch.sweepStale()
     val envStart = (loadavg(), memAvailMb(), scratchDirs())
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // spill/broadcast scratch under the per-process root (swept on
-      // exit/crash; /tmp blockmgr debris from dead runs measured 37 GB)
-      .config("spark.local.dir", Scratch.sparkLocalDir)
-      .getOrCreate()
+    val spark = GraftSession.build(s"local[${GraftSession.cpus}]",
+      GraftSession.cpus, "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // materialize via the noop sink: unlike count(), it evaluates every
     // output column (count lets Catalyst prune deterministic projections,
@@ -177,103 +284,20 @@ object Bench {
       case r => r
     }
     val envEnd = (loadavg(), memAvailMb(), scratchDirs())
-    def jstr(s: String): String = JsonUtil.jstr(s)
-    def sec(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f",
-      java.lang.Double.valueOf(v))
-    // one contended-row entry: raw attempts + rerun + the row's GC share,
-    // everything needed to tell "plan got slower" from "box was busy"
-    val contendedJson = contended.map { name =>
-      val (t1, t2) = attempts(name)
-      val r = rerun.get(name).filter(_ > 0).map(v => "," + sec(v)).getOrElse("")
-      s"""{"name":${jstr(name)},"attempts":[${sec(t1)},${sec(t2)}$r],"gc_sec":${sec(gcSec.getOrElse(name, 0.0))}}"""
-    }.mkString("[", ",", "]")
     val envJson = {
       val (l0, m0, s0) = envStart; val (l1, m1, s1) = envEnd
       s"""{"loadavg_start":${jstr(l0)},"loadavg_end":${jstr(l1)},"mem_avail_mb_start":$m0,"mem_avail_mb_end":$m1,"scratch_dirs_start":$s0,"scratch_dirs_end":$s1,"gc_total_sec":${sec(gcMillis() / 1e3)}}"""
     }
-    def line(entries: Seq[(String, Double)], dropped: Int,
-             withGc: Boolean, slim: Boolean = false): String = {
-      val qs = entries.map { case (k, v) => "\"" + k + "\":" + sec(v) }
-        .mkString("{", ",", "}")
-      val errs = results.collect { case (k, _, Some(e)) =>
-        "\"" + k + "\":" + jstr(e.take(300)) }.mkString("{", ",", "}")
-      val trans = transients.map { case (k, e) =>
-        "\"" + k + "\":" + jstr(e.take(300)) }.mkString("{", ",", "}")
-      val drop = if (dropped > 0)
-        s""","queries_dropped":$dropped,"queries_file":"BENCH.json"""" else ""
-      // a SPARK_GRAFT_BENCH_ONLY-restricted run marks itself explicitly:
-      // a partial record must never be mistakable for (or pinned as) a
-      // full suite run (r13 advice)
-      val filt = only.map(f =>
-        s""","suite_filter":${jstr(f.toSeq.sorted.mkString(","))}""")
-        .getOrElse("")
-      // rows reading process-shared materializations time a checkpoint
-      // read after the first toucher — flag them so per-query numbers
-      // aren't misread as full-chain costs (r14 advice). In the slim
-      // (stdout) record the full name list and the contended attempt
-      // detail yield their chars to per-query rows (r18 judge item 5:
-      // the one-line record must always carry enough rows for a
-      // round-over-round per-query comparison); both stay complete in
-      // the BENCH.json file record.
-      val sharedNames = SparkEntry.sharedStageReaders
-        .filter(n => results.exists(_._1 == n))
-      val shared = if (slim) sharedNames.size.toString
-        else sharedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val sharedKey =
-        if (slim) "shared_stage_readers_n" else "shared_stage_readers"
-      // per-query GC only in the full file record (stdout budget is
-      // ~2000 chars; the envelope + contended list always fit)
-      val gcs = if (withGc)
-        "," + "\"queries_gc\":" + gcSec.map { case (k, v) =>
-          "\"" + k + "\":" + sec(v) }.mkString("{", ",", "}")
-      else ""
-      // value_seq is the gate-comparable headline (r17 judge item 1):
-      // six same-code r17 runs produced concurrent walls of 117.5-396.5 s
-      // (the 4-way suite wall measures the box) while the Σ of the
-      // sequential best-of-2 per-query timings spread only 241→301 s
-      // and per-query medians agreed within 6%. Compare driver
-      // value_seq to the pin's Σ medians; `value` stays the honest
-      // concurrent-throughput wall but is NOT stable across boxes.
-      val valueSeq = results.collect { case (_, v, None) => v }.sum
-      // wall_contended: true when the box was already busy at start
-      // (1-min loadavg ≥ 2) or the pass itself flagged many skewed
-      // rows — a signal that `value` measured contention, not code
-      val load1 = envStart._1.split(",").headOption
-        .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(0.0)
-      val wallContended = load1 >= 2.0 || contended.size > 10
-      val cont = if (slim)
-        contended.map(jstr).mkString("[", ",", "]") else contendedJson
-      s"""{"metric":"total","value":${sec(wall)},"value_seq":${sec(valueSeq)},"wall_contended":$wallContended,"unit":"sec","queries":$qs,"queries_mode":"sequential_best_of_2_rerun_contended","queries_total":${results.size}$drop$filt,"$sharedKey":$shared,"errors":$errs,"transient_errors":$trans,"contended":$cont,"env":$envJson$gcs,"sf":"$sfDir"}"""
-    }
-    val timings = results.collect { case (k, v, None) => (k, v) }
+    val load1 = envStart._1.split(",").headOption
+      .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(0.0)
+    val record = Record(wall, results, transients, contended, attempts,
+      rerun, gcSec, envJson, load1, only, sfDir)
     // full-fidelity record → file (tracked in the repo, one line per round)
-    val full = line(timings.sortBy(_._1), 0, withGc = true)
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (full + "\n").getBytes("UTF-8"))
+      (fullLine(record) + "\n").getBytes("UTF-8"))
     catch { case scala.util.control.NonFatal(_) => () } // stdout still carries a line
-    // stdout → the driver keeps only the last ~2000 chars; 119 query names
-    // alone exceed that, so emit the envelope plus as many slowest-first
-    // queries as fit the budget, with explicit dropped-count + file pointer
-    // (never a silent truncation)
-    // r18 judge item 5: the stdout record must ALWAYS carry enough
-    // per-query rows for a driver-computable round-over-round
-    // comparison (the r17 record's empty queries block left PERF_r18
-    // with n_common: 0) — emit at least the top 40 slowest rows, more
-    // if the budget allows; the slim envelope (counts instead of the
-    // shared-reader name list, contended names without attempt detail)
-    // frees the chars. Full fidelity stays in the BENCH.json record.
-    val budget = 1850
-    val bySlowest = timings.sortBy(-_._2)
-    val floor = math.min(40, bySlowest.length)
-    val fit = (bySlowest.length to 0 by -1)
-      .find(n =>
-        line(bySlowest.take(n), timings.length - n, withGc = false,
-          slim = true).length <= budget)
-      .getOrElse(0)
-      .max(floor)
-    println(line(bySlowest.take(fit), timings.length - fit, withGc = false,
-      slim = true))
+    println(stdoutLine(record))
     spark.stop()
   }
 }

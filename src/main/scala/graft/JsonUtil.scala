@@ -1,12 +1,9 @@
 package graft
 
-/** Minimal JSON string escaping shared by the measurement mains.
-  *
-  * Bench and ScaleProbe each emit hand-assembled one-line JSON records;
-  * before r18, ScaleProbe escaped error messages with a narrow
-  * quote/backslash/CR/LF regex, so a tab or other control character in
-  * a Spark stack summary produced an invalid record (r17 ADVICE). One
-  * escaper, covering every char < 0x20, used by both.
+/** Minimal JSON rendering shared by the mains (Bench, Verify, Probe),
+  * which emit hand-assembled one-line JSON records. Every char < 0x20
+  * is escaped: a tab in a Spark stack summary once made a record
+  * invalid.
   */
 object JsonUtil {
   /** `s` as a quoted JSON string literal, all control chars escaped. */
@@ -16,4 +13,8 @@ object JsonUtil {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
+
+  /** `v` with `digits` decimals, locale-independent (a JSON number). */
+  def num(v: Double, digits: Int = 3): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", java.lang.Double.valueOf(v))
 }

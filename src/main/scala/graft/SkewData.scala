@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: derive a deliberately SKEWED sibling of the uniform ×10
@@ -28,12 +27,7 @@ object SkewData {
   def main(args: Array[String]): Unit = {
     val in = args.headOption.getOrElse("/tmp/graft-sf1")
     val out = if (args.length > 1) args(1) else "/tmp/graft-sf1skew"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build("local[8]", 8, "graft-skewdata")
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = Tables.table(spark, in, "documents")

@@ -23,22 +23,28 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.table(s, dir, name)
 
-  /** Cloned session for the streaming harness queries (shares the
-    * SparkContext, own SQLConf + temp-view catalog). A stateful streaming
-    * operator instantiates one state store per shuffle partition per
-    * micro-batch; these fixed few-row traces measure operator semantics,
-    * not data parallelism, so even 4 partitions were measurable pure
-    * state-store and task-scheduling overhead per micro-batch — 1
-    * partition cuts the per-batch floor 4× with identical output (state
-    * is hash-partitioned by key; the partition count never changes
-    * results). Production sizing guidance stays with the operators
-    * (streaming/EventStreamOps scaladoc): partitions follow key
-    * cardinality × event rate, set once at query start.
-    *
-    * ONE clone is cached per parent session (r12 flagged per-query
-    * newSession cost across 16 st_* rows): the clone's conf is never
-    * mutated after creation and memory-sink table names are unique per
-    * query, so concurrent st_* queries share it safely. */
+  /** A per-process cache: get, else build OUTSIDE any map update, then
+    * putIfAbsent. Building inside computeIfAbsent is the landmine this
+    * avoids: dedupLabels05 nests jaccardPairs05, and a nested
+    * computeIfAbsent on one map throws "Recursive update" whenever the
+    * two keys hash to the same bin (population-order dependent — 7 specs
+    * tripped it in r15 when new tests shifted the fill order). Every
+    * value cached here is a deterministic function of its key, so a
+    * racing duplicate build is benign: the first insert wins and both
+    * callers get it. */
+  private final class Memo[K, V] {
+    private val m = new java.util.concurrent.ConcurrentHashMap[K, V]()
+    def apply(k: K)(build: => V): V = {
+      val hit = m.get(k)
+      if (hit != null) hit
+      else {
+        val v = build
+        val prev = m.putIfAbsent(k, v)
+        if (prev != null) prev else v
+      }
+    }
+  }
+
   /** Process-lifetime scratch dirs for replayable demo tables (k32's
     * partition generations): written once per key, reused across
     * invocations of the same query builder. Lives under [[Scratch.root]]
@@ -46,19 +52,17 @@ object SparkEntry {
     * data that is a pure function of the key — queries whose semantics
     * need a FRESH dir per run (upsert/compaction state) call
     * [[Scratch.dir]] directly. */
-  private val scratchDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val scratchDirs = new Memo[String, String]
   /** Per-process scratch parquet keyed by the FULL `key` (callers pass
     * e.g. "k32_" + the sf-dir path, so two different dirs can never
     * collide into one cache slot — the r13 32-bit-hashCode advice);
     * only the temp-directory NAME is sanitized/truncated. */
   private def scratchDir(key: String)(write: String => Unit): String =
-    scratchDirs.computeIfAbsent(key, { _ =>
-      val prefix = key.replaceAll("[^A-Za-z0-9_-]", "_").takeRight(48)
-      val dir = Scratch.dir(prefix)
+    scratchDirs(key) {
+      val dir = Scratch.dir(key.replaceAll("[^A-Za-z0-9_-]", "_").takeRight(48))
       write(dir.toString)
       dir.toString
-    })
+    }
 
   /** One deterministic PQ model (codebooks, codes) per (session, sf
     * dir), trained once per process and EAGERLY checkpointed (it is
@@ -70,23 +74,14 @@ object SparkEntry {
     * vector store does (codebooks persist beside the index, serving
     * never retrains). The oracle replays the training chain per query
     * as before. */
-  private val pqModels = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-  private def pqModel(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val k = (s, d)
-    val hit = pqModels.get(k)
-    if (hit != null) hit
-    else {
-      // same get/build/putIfAbsent discipline as [[sharedFrame]] — no
-      // work inside the CHM update (the nested-computeIfAbsent landmine)
+  private val pqModels = new Memo[(SparkSession, String), (DataFrame, DataFrame)]
+  private def pqModel(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    pqModels((s, d)) {
       val emb = t(s, d, "embeddings")
         .withColumn("embedding", col("embedding").cast("array<double>"))
       val (books, codes) = SimilarityOps.pqTrain(emb)
-      val v = (books.localCheckpoint(), codes.localCheckpoint())
-      val prev = pqModels.putIfAbsent(k, v)
-      if (prev != null) prev else v
+      (books.localCheckpoint(), codes.localCheckpoint())
     }
-  }
 
   /** One deterministic residual-IVFPQ model per (session, sf dir) —
     * the [[pqModel]] discipline for the residual path: ann_ivfpq_
@@ -94,23 +89,17 @@ object SparkEntry {
     * retrained bit-identical coarse centroids + residual codebooks.
     * Eagerly checkpointed (concurrent consumers); the oracles replay
     * the full training chain per query as before. */
-  private val residualModels = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame, DataFrame, DataFrame)]()
+  private val residualModels =
+    new Memo[(SparkSession, String), (DataFrame, DataFrame, DataFrame, DataFrame)]
   private def residualModel(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val k = (s, d)
-    val hit = residualModels.get(k)
-    if (hit != null) hit
-    else {
+      : (DataFrame, DataFrame, DataFrame, DataFrame) =
+    residualModels((s, d)) {
       val emb = t(s, d, "embeddings")
         .withColumn("embedding", col("embedding").cast("array<double>"))
       val (cents, cells, cent2, enc) = SimilarityOps.ivfpqResidualModel(emb)
-      val v = (cents.localCheckpoint(), cells.localCheckpoint(),
+      (cents.localCheckpoint(), cells.localCheckpoint(),
         cent2.localCheckpoint(), enc.localCheckpoint())
-      val prev = residualModels.putIfAbsent(k, v)
-      if (prev != null) prev else v
     }
-  }
 
   /** Per-process shared retrieval legs (same contract as [[pqModel]]:
     * deterministic pure functions of the corpus, eagerly checkpointed,
@@ -120,26 +109,10 @@ object SparkEntry {
     * BM25(scan, join, merge) top-20 postings chain and the identical
     * brute-cosine top-20 for query vector 0; the r13 driver record
     * shows the duplication (search_rrf 1.07 → 1.65 s). */
-  private val sharedFrames = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
+  private val sharedFrames = new Memo[(SparkSession, String, String), DataFrame]
   private def sharedFrame(s: SparkSession, d: String, key: String)(
-      build: => DataFrame): DataFrame = {
-    val k = (s, d, key)
-    val hit = sharedFrames.get(k)
-    if (hit != null) hit
-    else {
-      // build OUTSIDE the map update: dedupLabels05 nests
-      // jaccardPairs05, and a nested computeIfAbsent on one CHM throws
-      // "Recursive update" whenever the two keys hash to the same bin —
-      // population-order dependent (7 specs tripped it in r15 when new
-      // tests shifted the fill order). A racing duplicate build is
-      // benign: the chains are deterministic, so both values are
-      // value-identical and putIfAbsent keeps exactly one.
-      val v = build.localCheckpoint()
-      val prev = sharedFrames.putIfAbsent(k, v)
-      if (prev != null) prev else v
-    }
-  }
+      build: => DataFrame): DataFrame =
+    sharedFrames((s, d, key))(build.localCheckpoint())
 
   /** BM25 top-20 for the standard (scan, join, merge) query. */
   private def bm25Leg(s: SparkSession, d: String): DataFrame =
@@ -294,12 +267,29 @@ object SparkEntry {
   // inside nodeSimilarity/linkPredict, which survives coalescer-behavior
   // drift instead of encoding a byte constant against it.
 
-  private val streamSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
+  /** Cloned session for the streaming harness queries (shares the
+    * SparkContext, own SQLConf + temp-view catalog). A stateful streaming
+    * operator instantiates one state store per shuffle partition per
+    * micro-batch; these fixed few-row traces measure operator semantics,
+    * not data parallelism, so even 4 partitions were measurable pure
+    * state-store and task-scheduling overhead per micro-batch — 1
+    * partition cuts the per-batch floor 4× with identical output (state
+    * is hash-partitioned by key; the partition count never changes
+    * results). Production sizing guidance stays with the operators
+    * (streaming/EventStreamOps scaladoc): partitions follow key
+    * cardinality × event rate, set once at query start.
+    *
+    * ONE clone is cached per parent session (r12 flagged per-query
+    * newSession cost across 16 st_* rows): the clone's conf is never
+    * mutated after creation and memory-sink table names are unique per
+    * query, so concurrent st_* queries share it safely. */
+  private val streamSessions = new Memo[SparkSession, SparkSession]
   private def streamSession(s: SparkSession): SparkSession =
-    streamSessions.computeIfAbsent(s, { parent =>
-      val ss = parent.newSession()
+    streamSessions(s) {
+      val ss = s.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "1")
+      // a fresh session starts without the engine's functions and rule
+      graft.plans.GraftSparkExtensions.install(ss)
       // r19 REJECTED experiment (VERDICT item 6): disabling no-data
       // micro-batches (spark.sql.streaming.noDataMicroBatches.enabled=
       // false) would cut ~3 of st_curate's 7 batches (~1.5 s of its
@@ -307,9 +297,9 @@ object SparkEntry {
       // window flushes and watermark-eviction-dependent re-admissions
       // (st_curate doc 6) NEED the watermark-advance batch. The
       // per-batch floor decomposition lives in PLANS.md round-19
-      // (StreamFloor probe).
+      // (`graft.Probe stream`).
       ss
-    })
+    }
 
   private val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 

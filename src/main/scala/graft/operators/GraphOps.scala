@@ -228,7 +228,7 @@ object GraphOps {
     * configured shuffle partitioning governs, unchanged). Both
     * self-join sides read the one exchange, so the join itself adds no
     * further shuffle. */
-  private def fanOutByKey(df: DataFrame, key: String): DataFrame = {
+  private[graft] def fanOutByKey(df: DataFrame, key: String): DataFrame = {
     val ss = df.sparkSession
     val parts = math.max(ss.sparkContext.defaultParallelism,
       ss.conf.get("spark.sql.shuffle.partitions", "200").toInt)

@@ -1,28 +1,15 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.SparkSessionExtensions
 
-/** SparkSessionExtensions hook registering the engine's native
-  * expressions into the SQL function registry, so `spark.sql("SELECT
-  * fnv64(x) …")` plans the codegen expression (no UDF tier).
-  *
-  * Use either `spark.sql.extensions=graft.plans.GraftSparkExtensions` at
-  * session build, or `GraftSparkExtensions.install(spark)` on a live
-  * session.
+/** Registers the engine's native expressions into a session's SQL
+  * function registry, so `spark.sql("SELECT fnv64(x) …")` plans the
+  * codegen expression (no UDF tier), and adds [[NanosFilterRule]] to its
+  * optimizer. [[graft.GraftSession.build]] installs both on every
+  * session it builds; operators call [[GraftSparkExtensions.install]]
+  * on the session of the frame they are given.
   */
-class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftSparkExtensions.functions.foreach { case (name, info, builder) =>
-      ext.injectFunction((FunctionIdentifier(name), info, builder))
-    }
-    ext.injectOptimizerRule(_ => NanosFilterRule)
-  }
-}
-
 object GraftSparkExtensions {
   private type Builder = Seq[Expression] => Expression
 
@@ -97,11 +84,10 @@ object GraftSparkExtensions {
         org.apache.spark.sql.catalyst.expressions.BitwiseCount(
           org.apache.spark.sql.catalyst.expressions.BitwiseXor(a, b))))
 
-  /** Runtime registration on an existing session (idempotent). After
-    * this, `selectExpr("fnv64(col)")` / `expr("fnv64(col)")` plan the
-    * native expression, and the [[NanosFilterRule]] pushdown-derivation
-    * rule runs in the optimizer (experimental-methods slot, the live-
-    * session equivalent of injectOptimizerRule). */
+  /** Registration on a live session (idempotent). After this,
+    * `selectExpr("fnv64(col)")` / `expr("fnv64(col)")` plan the native
+    * expression, and the [[NanosFilterRule]] pushdown-derivation rule
+    * runs in the optimizer (the experimental-methods slot). */
   def install(spark: SparkSession): Unit = {
     functions.foreach { case (name, _, builder) =>
       spark.sessionState.functionRegistry

@@ -42,8 +42,8 @@ class NanosFilterRuleSpec extends AnyFunSuite {
     "without the rule, including the ±999 ns quantum edges") {
     val lo = lit("2023-11-14 23:00:00").cast("timestamp")
     val hi = lit("2023-11-14 23:10:00").cast("timestamp")
-    def run() = legacyRead.filter(col("ts") >= lo && col("ts") < hi)
-      .agg(count(lit(1)), sum(col("id"))).collect()(0)
+    def query = legacyRead.filter(col("ts") >= lo && col("ts") < hi)
+    def run() = query.agg(count(lit(1)), sum(col("id"))).collect()(0)
     graft.plans.GraftSparkExtensions.install(spark)
     val withRule = run()
     val saved = spark.experimental.extraOptimizations
@@ -52,6 +52,11 @@ class NanosFilterRuleSpec extends AnyFunSuite {
     try {
       val without = run()
       assert(withRule == without)
+      // no second registration (e.g. a spark.sql.extensions injection)
+      // still derives the raw bound once the rule is taken out
+      val plan = query.queryExecution.executedPlan.toString
+      assert(!plan.contains("GreaterThanOrEqual(tsn,") &&
+        !plan.contains("LessThan(tsn,"), plan)
       assert(withRule.getLong(0) > 0L) // non-vacuous window
     } finally spark.experimental.extraOptimizations = saved
   }
